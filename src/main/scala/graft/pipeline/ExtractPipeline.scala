@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.serve.SpanStats
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -222,8 +223,7 @@ object ExtractPipeline {
         // V2 cap: both branches read the SAME persisted projection — still
         // one source scan; oversize docs keep a row (resume invariants:
         // data covers every input doc exactly once)
-        val chars = aggregate(col("spans"), lit(0L),
-          (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))
+        val chars = element_at(SpanStats.stats(col("spans")), SpanStats.TextChars)
         val normal = todo.where(chars <= cap)
         val oversize = todo.where(chars > cap).select(
           col("doc_id"), col("bucket"), col("n_dead"),
@@ -250,16 +250,18 @@ object ExtractPipeline {
     // single scan instead of per-row round-trips
     val written = spark.read.parquet(s"${cfg.outDir}/data")
       .where(if (done.isEmpty) lit(true) else !col("bucket").isin(done.toSeq: _*))
+    // the span counters come from the SpanStats kernel, staged in its own
+    // projection so it evaluates once per row (as Queries.statusProjection)
+    def stat(i: Int): Column = sum(element_at(col("sst"), i))
     val perBucket = written
-      .select(col("bucket"), col("spans"), col("n_dead"))
+      .select(col("bucket"), SpanStats.stats(col("spans")).as("sst"), col("n_dead"))
       .groupBy("bucket")
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(size(col("spans"))).as("n_spans"),
-        sum(aggregate(col("spans"), lit(0L),
-          (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))).as("text_chars"),
-        sum(size(filter(col("spans"), s => s.getField("kind") === "image"))).as("n_images"),
-        sum(size(filter(col("spans"), s => s.getField("kind") === "error"))).as("n_errors"),
+        stat(SpanStats.NSpans).as("n_spans"),
+        stat(SpanStats.TextChars).as("text_chars"),
+        stat(SpanStats.NImages).as("n_images"),
+        stat(SpanStats.NErrors).as("n_errors"),
         sum(col("n_dead")).as("n_dead_letter"))
       .cache() // consumed by the ckpt write, the empty-claim diff, and the report
 

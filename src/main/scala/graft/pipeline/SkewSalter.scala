@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.extract.{ExtractKernel, Extractor}
+import graft.model.Schemas
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,15 +32,12 @@ object SkewSalter {
   /** Target spans per chunk on the heavy path. */
   val DefaultChunkTarget = 1024
 
-  private val outSpanType = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-
   /** Extract with skew defense. Preserves all non-(doc_id,spans) columns
     * (e.g. the pipeline's bucket column) on both paths.
     */
   def extract(docs: DataFrame,
       heavyThreshold: Int = DefaultHeavyThreshold,
-      chunkTarget: Int = DefaultChunkTarget,
-      chunkParallelism: Option[Int] = None): DataFrame = {
+      chunkTarget: Int = DefaultChunkTarget): DataFrame = {
     val extra = docs.columns.filterNot(c => c == "doc_id" || c == "spans").toSeq
 
     val light = docs.where(size(col("spans")) <= heavyThreshold)
@@ -52,11 +50,7 @@ object SkewSalter {
       (col("doc_id") +: extra.map(col) :+
         posexplode(SpanChunker.chunk_spans(col("spans"), lit(chunkTarget)))
           .as(Seq("chunk_id", "chunk"))): _*)
-    val spread = chunkParallelism match {
-      case Some(p) => chunked.repartition(p, col("doc_id"), col("chunk_id"))
-      case None => chunked.repartition(col("doc_id"), col("chunk_id"))
-    }
-    val extractedChunks = spread.select(
+    val extractedChunks = chunked.repartition(col("doc_id"), col("chunk_id")).select(
       (col("doc_id") +: extra.map(col) :+
         col("chunk_id") :+
         ExtractKernel.extract_spans(col("chunk"), col("doc_id")).as("spans")): _*)
@@ -91,6 +85,6 @@ object SkewSalter {
         s.getField("text").as("text"),
         s.getField("media_ref").as("media_ref"),
         i.cast("int").as("offset"))))
-    merged.cast(outSpanType)
+    merged.cast(Schemas.spans.catalogString)
   }
 }

@@ -1,11 +1,8 @@
 package graft.textops
 
+import graft.Kernels
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact Jaccard similarity of two DISTINCT string arrays in one pass —
@@ -48,25 +45,16 @@ object Jaccard {
     else BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  def jaccard(a: Column, b: Column): Column =
-    ColumnShim.column(JaccardExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
-}
-
-case class JaccardExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    def strings(x: Any): Array[UTF8String] = {
-      val arr = x.asInstanceOf[ArrayData]
+  /** `jaccard(arr_a, arr_b)`: the [[Kernels.Jaccard]] entry. */
+  def jaccard(a: ArrayData, b: ArrayData): Double = {
+    def strings(arr: ArrayData): Array[UTF8String] = {
       val out = new Array[UTF8String](arr.numElements())
       var i = 0
       while (i < out.length) { out(i) = arr.getUTF8String(i); i += 1 }
       out
     }
-    Jaccard.jaccardScala(strings(a), strings(b))
+    jaccardScala(strings(a), strings(b))
   }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardExpr =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "jaccard"
+
+  def jaccard(a: Column, b: Column): Column = Kernels.Jaccard(a, b)
 }

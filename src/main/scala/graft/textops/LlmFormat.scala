@@ -1,11 +1,8 @@
 package graft.textops
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Kernels
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -19,9 +16,9 @@ import scala.util.matching.Regex
   *    `coalesce(regexp_extract...)` chain, ordered-pattern semantics
   *    preserved by coalesce order;
   *  - L4 best-effort JSON extraction cascade (reference utils.py:321-437)
-  *    — a native Catalyst expression around a pure Scala cascade (methods:
-  *    whole-string parse → first valid bracketed substring → template-key
-  *    regex assembly → example-key assembly → cleaned raw).
+  *    — a native kernel ([[graft.Kernels]]) around a pure Scala cascade
+  *    (methods: whole-string parse → first valid bracketed substring →
+  *    template-key regex assembly → example-key assembly → cleaned raw).
   * Template wording is our own; the reference's *structure* (context +
   * question + conditional format instructions, empty-context sentinel) is
   * what is mirrored.
@@ -79,7 +76,7 @@ object LlmFormat {
     regexp_replace(coalesce(tries :+ lit(null).cast("string"): _*), "[,;.]+$", "")
   }
 
-  // ---- L4 cascade (plain Scala; wrapped as a Catalyst expression) ----
+  // ---- L4 cascade (plain Scala; called as a native kernel) ----
 
   private val mapper = new ObjectMapper()
 
@@ -92,7 +89,7 @@ object LlmFormat {
   private val objRe: Regex = new Regex("(?s)\\{.*?\\}")
   private val arrRe: Regex = new Regex("(?s)\\[.*?\\]")
 
-  // the cascade runs per ROW inside FormatBestEffortExpr — compile each
+  // the cascade runs per ROW inside the format_best_effort kernel — compile each
   // key's battery once (keys are template fields, a tiny set) and the
   // trailing-punctuation strip once
   private val batteryCache =
@@ -256,31 +253,18 @@ object LlmFormat {
       .orderBy("doc_id")
   }
 
-  /** `format_best_effort(response, template, example)` as a Column. */
-  def format_best_effort(response: Column, template: Column, example: Column): Column =
-    ColumnShim.column(FormatBestEffortExpr(
-      ColumnShim.expression(response),
-      ColumnShim.expression(template),
-      ColumnShim.expression(example)))
-}
-
-case class FormatBestEffortExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    def str(e: Expression): String = e.eval(input) match {
-      case null => null
-      case u: UTF8String => u.toString
-      case other => other.toString
-    }
-    val out = LlmFormat.formatBestEffort(str(first), str(second), str(third))
+  /** `format_best_effort(response, template, example)`: the
+    * [[Kernels.FormatBestEffort]] entry. Null-tolerant: a null argument
+    * takes the cascade's null branch instead of nulling the result.
+    */
+  def format_best_effort(response: UTF8String, template: UTF8String,
+      example: UTF8String): UTF8String = {
+    def str(u: UTF8String) = if (u == null) null else u.toString
+    val out = formatBestEffort(str(response), str(template), str(example))
     if (out == null) null else UTF8String.fromString(out)
   }
 
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): FormatBestEffortExpr = copy(first = f, second = s, third = t)
-  override def prettyName: String = "format_best_effort"
+  /** `format_best_effort(response, template, example)` as a Column. */
+  def format_best_effort(response: Column, template: Column, example: Column): Column =
+    Kernels.FormatBestEffort(response, template, example)
 }

@@ -1,10 +1,7 @@
 package graft.textops
 
+import graft.Kernels
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 60-bit SimHash over space-separated tokens (empty tokens included, to
@@ -12,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle). Word hash = md5 hex prefix as int ([[PortableHash]]); bit b of
   * the fingerprint is the sign of the Σ(±1) vote over words.
   *
-  * Native single-pass expression: the column-op equivalent needs 60
+  * Native single-pass kernel: the column-op equivalent needs 60
   * interpreted `aggregate` folds per row. 60 bits (not 64) because the
   * portable hash yields 15 hex chars; 4 bands of 15 bits give GUARANTEED
   * recall for Hamming distance <= 3 (pigeonhole: 3 flips cannot touch all
@@ -46,15 +43,8 @@ object SimHash {
     fp
   }
 
-  def simhash60(c: Column): Column =
-    ColumnShim.column(SimHashExpr(ColumnShim.expression(c)))
-}
+  /** `simhash60(text)`: the [[Kernels.SimHash60]] entry. */
+  def simhash60(text: UTF8String): Long = simhash(text.toString)
 
-case class SimHashExpr(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    SimHash.simhash(input.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
-  override def prettyName: String = "simhash60"
+  def simhash60(c: Column): Column = Kernels.SimHash60(c)
 }

@@ -1,12 +1,9 @@
 package graft.textops
 
+import graft.Kernels
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Similarity search over the embedding column (`array<float>`, dim 64):
   * brute-force cosine top-k as the exact baseline, and seeded
@@ -93,22 +90,28 @@ object Similarity {
     * interpreted, per scored row); [[dotColumnar]] remains as the
     * parity reference (SimilaritySpec pins kernel == columnar).
     */
-  private[graft] def dot(a: Column, b: Column): Column =
-    ColumnShim.column(DotExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
+  private[graft] def dot(a: Column, b: Column): Column = Kernels.DotFold(a, b)
 
   /** Column-op reference twin of [[dot]] (identical fold order). */
   private[graft] def dotColumnar(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Scala twin of [[dot]]: sequential left-to-right multiply-add from
-    * 0.0 — the same IEEE operation order as the HOF fold and DuckDB's
-    * list_sum(list_transform(...)).
+  /** `dot_fold(a, b)`: the [[Kernels.DotFold]] entry — sequential
+    * left-to-right multiply-add from 0.0, the same IEEE operation order as
+    * the HOF fold and DuckDB's list_sum(list_transform(...)). Null on
+    * unequal lengths or a null element, as [[dotColumnar]] (zip_with pads
+    * the shorter side with nulls, and a null term nulls the fold).
     */
-  private[graft] def dotScala(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
+  def dot_fold(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = a.numElements()
+    if (b.numElements() != n) return null
     var acc = 0.0
     var i = 0
-    while (i < n) { acc += a(i) * b(i); i += 1 }
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      acc += a.getDouble(i) * b.getDouble(i)
+      i += 1
+    }
     acc
   }
 
@@ -147,11 +150,16 @@ object Similarity {
     out
   }
 
-  /** `rh_signatures(e)` as a Column — native single-pass signature kernel
-    * (the column-op form evaluates tables*bits interpreted HOF folds/row).
+  /** `rh_signatures(e, tables, bits)`: the [[Kernels.RhSignatures]]
+    * entry — all `tables` signatures in one pass (the column-op form
+    * evaluates tables*bits interpreted HOF folds/row).
     */
+  def rh_signatures(e: ArrayData, tables: Int, bits: Int): ArrayData =
+    new GenericArrayData(
+      signaturesScala(e.toDoubleArray(), tables, bits).map(Long.box).toArray[Any])
+
   def rhSignatures(e: Column, tables: Int, bits: Int): Column =
-    ColumnShim.column(RhSignaturesExpr(ColumnShim.expression(e), tables, bits))
+    Kernels.RhSignatures(e, lit(tables), lit(bits))
 
   /** (vec_id, e, nrm[, label]) with the norm projected once. */
   private def withNorm(df: DataFrame): DataFrame =
@@ -254,37 +262,4 @@ object Similarity {
       .where(col("sim") >= NearDupCosine)
       .orderBy("id_a", "id_b")
   }
-}
-
-/** Catalyst expression wrapping [[Similarity.dotScala]]: the left-fold
-  * dot product of two equal-length double arrays (every caller pairs
-  * same-dimension vectors; the fold order matches the column-op twin
-  * and DuckDB bit-for-bit).
-  */
-case class DotExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Similarity.dotScala(a.asInstanceOf[ArrayData].toDoubleArray(),
-      b.asInstanceOf[ArrayData].toDoubleArray())
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DotExpr = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_fold"
-}
-
-/** Catalyst expression wrapping [[Similarity.signaturesScala]]: all
-  * `tables` B-bit sign signatures of a double vector in one pass.
-  */
-case class RhSignaturesExpr(child: Expression, tables: Int, bits: Int)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData].toDoubleArray()
-    new GenericArrayData(
-      Similarity.signaturesScala(v, tables, bits).map(Long.box).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): RhSignaturesExpr =
-    copy(child = newChild)
-  override def prettyName: String = "rh_signatures"
 }

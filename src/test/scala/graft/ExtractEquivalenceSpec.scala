@@ -5,7 +5,7 @@ import graft.synth.SpanSynth
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native [[graft.extract.ExtractSpansExpr]] kernel and the pure
+/** The native [[graft.extract.ExtractKernel.extract_spans]] kernel and the pure
   * column-op implementation ([[Extractor.extractColumnar]]) must agree
   * span-for-span; and the pipeline must be deterministic under
   * repartitioning (SURVEY.md §5.2 items 3-4: determinism across partition

@@ -63,6 +63,26 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(r.length === 4) // composed: combining acute folded into the e
   }
 
+  test("every SQL kernel resolves at its registry arity; null in gives null out") {
+    val names = GraftExtensions.functions.map(_.name)
+    assert(names.sorted === Seq("extract_spans", "fingerprint60", "format_best_effort",
+      "gram_hashes60", "html_strip", "jaccard", "nfc_normalize", "repetition_fracs",
+      "simhash60", "synth_spans"))
+    GraftExtensions.functions.foreach { k =>
+      def call(n: Int) = spark.sql(s"SELECT ${k.name}(${Seq.fill(n)("NULL").mkString(", ")}) AS r")
+      val df = call(k.args.length)
+      assert(df.schema.head.dataType === k.dataType, k.name)
+      val r = df.collect()(0)
+      // format_best_effort is the one null-tolerant kernel: a null
+      // response still comes back null, a null template does not
+      if (k.name != "format_best_effort") assert(r.isNullAt(0), k.name)
+      intercept[Exception](call(k.args.length + 1).collect())
+    }
+    val fbe = spark.sql("SELECT format_best_effort('name: acme', NULL, NULL)")
+      .collect()(0)
+    assert(!fbe.isNullAt(0))
+  }
+
   test("extensions class injects without error") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
   }

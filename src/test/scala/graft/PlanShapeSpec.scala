@@ -367,4 +367,21 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(!phys.contains("Exchange"), s"\n$phys")
     assert(count(phys, "extract_spans(") === 1, s"\n$phys")
   }
+
+  test("flagship extraction compiles the kernel: no CodegenFallback, static call") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val tmp = java.nio.file.Files.createTempDirectory("graft-planshape").toString
+    graft.synth.SpanSynth.docsInput(spark, sf).write.mode("overwrite")
+      .parquet(s"$tmp/spans")
+    val df = graft.extract.Extractor.extract(spark.read.parquet(s"$tmp/spans"))
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collect { case w: WholeStageCodegenExec => w }.nonEmpty, s"\n$plan")
+    val fallbacks = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e: CodegenFallback => e
+    }))
+    assert(fallbacks.isEmpty, s"\n$plan")
+    val code = org.apache.spark.sql.execution.debug.codegenString(plan)
+    assert(code.contains("graft.extract.ExtractKernel.extract_spans("), code)
+  }
 }

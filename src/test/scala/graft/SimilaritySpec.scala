@@ -65,6 +65,18 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
+    // hostile input: unequal lengths and null elements null the fold in
+    // both forms (zip_with pads the shorter side with nulls) — never a
+    // product silently truncated to the shorter length
+    val bad = spark.sql(
+      """SELECT array(1.0D, 2.0D) AS a, array(3.0D) AS b
+         UNION ALL SELECT array(1.0D, CAST(NULL AS DOUBLE)), array(1.0D, 2.0D)
+         UNION ALL SELECT CAST(array() AS ARRAY<DOUBLE>), CAST(array() AS ARRAY<DOUBLE>)""")
+      .select(Similarity.dot(col("a"), col("b")).as("native"),
+        Similarity.dotColumnar(col("a"), col("b")).as("columnar"))
+      .collect()
+    assert(bad.map(r => (r.get(0), r.get(1))).toSeq ===
+      Seq((null, null), (null, null), (0.0, 0.0)))
   }
 
   test("near-dup finds nearly all planted pairs at high similarity") {

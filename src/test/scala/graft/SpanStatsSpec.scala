@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The round-6 span-stats kernel must agree with the column-op HOF
   * forms the status projection used through round 5 — on real extracted
   * output (every doc class, sentinel, image and dead-letter path) and
-  * on synthetic edge rows (empty array, null text, unicode text).
+  * on synthetic edge rows (empty array, null text, unicode text, null
+  * span element).
   */
 class SpanStatsSpec extends AnyFunSuite with SparkSpec {
 
@@ -34,7 +35,8 @@ class SpanStatsSpec extends AnyFunSuite with SparkSpec {
       (1L, Seq.empty[(String, String, String, Int)]),
       (2L, Seq(("image", null: String, "media://x/0", 0))),
       (3L, Seq(("text", "café 😀", null: String, 0),
-        ("error", "", null: String, 1))))
+        ("error", "", null: String, 1))),
+      (4L, Seq(("text", "ab", null: String, 0), null)))
       .toDF("doc_id", "raw")
       .select(col("doc_id"), col("raw").cast(
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>")
@@ -44,5 +46,7 @@ class SpanStatsSpec extends AnyFunSuite with SparkSpec {
     rows.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
     // unicode text_chars counts codepoints: "café 😀" = 6
     assert(rows(2).getSeq[Long](0) === Seq(2L, 0L, 1L, 6L))
+    // a null span element counts as a span and contributes nothing else
+    assert(rows(3).getSeq[Long](0) === Seq(2L, 0L, 0L, 2L))
   }
 }
